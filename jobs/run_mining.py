@@ -8,7 +8,10 @@ Pipeline (the reference's ``evaluate_embeddings`` + ``TripletMiner``
 re-expressed, ``loc2vec_run.py:13-48`` / ``triplet_mining.py:22-164``):
 
 images table
-  -> decode + featurize (mapInPandas, one Python crossing)     [E2]
+  -> ONE decode per tile (media.map_media, one Python crossing,
+     cached): sharpness, embedding, and the embeddings of its
+     seeded flip/rotate variants                               [E2]
+  -> optional quality gate: a filter on the cached sharpness
   -> optional PCA projection (partial+final moments, broadcast
      components — optim.py:53-62 parity)                       [A6]
   -> cell assignment from caption/phash lat-lon                [F12]
@@ -29,12 +32,22 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import Window, functions as F  # noqa: E402
+from pyspark.sql import Window, functions as F, types as T  # noqa: E402
 
 from loc2vec_spark import lineage  # noqa: E402
 from loc2vec_spark.operators import geo, images as img_ops  # noqa: E402
 from loc2vec_spark.operators import stats, triplets  # noqa: E402
+from loc2vec_spark.operators.media import map_media  # noqa: E402
 from loc2vec_spark.session import get_spark  # noqa: E402
+
+TILE_SCHEMA = T.StructType([
+    T.StructField("image_id", T.StringType()),
+    T.StructField("ok", T.BooleanType()),
+    T.StructField("base_id", T.StringType()),     # source tile's id
+    T.StructField("sharpness", T.DoubleType()),   # NULL below 3x3
+    T.StructField("embedding", T.ArrayType(T.FloatType())),
+])
+
 
 def main(argv=None) -> None:
     ap = argparse.ArgumentParser()
@@ -65,35 +78,36 @@ def main(argv=None) -> None:
 
     images = spark.read.parquet(args.images)
 
-    # Quality gate (image face of the corpus job's text filters): score
-    # once, semi-join the ids that pass — blurry/empty tiles never reach
-    # the featurizer. Join, not collect: the pass-set is data-scale.
+    # E2 in one pass: each tile decodes once, and its sharpness (the
+    # image_quality gate signal), its embedding and the embeddings of
+    # its seeded dihedral variants all come off the same pixels. The
+    # id travels in the row (fixes the reference's positional
+    # id/embedding misalignment, loc2vec_run.py:33-48). Cached: the
+    # gate, PCA's two jobs, the embedding write and the cell join all
+    # read this frame, so nothing downstream re-decodes.
+    def featurize(iid, arr):
+        sharp = (None if img_ops.degenerate(arr)
+                 else round(img_ops.quality_signals(arr)[0], 6))
+        rows = [(iid, True, iid, sharp, img_ops.embed(arr))]
+        # variants (contrastive-training widening; the reference trains
+        # on raw tiles only) are real rows with their own ids, so every
+        # downstream stage (cells, kNN, lineage) treats them uniformly;
+        # they carry their source tile's sharpness through the gate
+        for vid, _op, aug in img_ops.variants(iid, arr, args.seed,
+                                              args.augment_copies):
+            rows.append((vid, True, iid, sharp, img_ops.embed(aug)))
+        return rows
+
+    tiles = map_media(images, "image_id", img_ops.decode_image, featurize,
+                      TILE_SCHEMA).filter("ok").cache()
+
+    # Quality gate (image face of the corpus job's text filters):
+    # blurry/empty tiles drop out before the kNN; a NULL sharpness
+    # (tile under 3x3) fails it.
     if args.min_sharpness > 0:
-        good = img_ops.image_quality(images).filter(
-            (F.col("ok")) & (F.col("sharpness") >= args.min_sharpness)) \
-            .select("image_id")
-        images = images.join(good, "image_id", "left_semi")
+        tiles = tiles.filter(F.col("sharpness") >= args.min_sharpness)
 
-    # Optional pool multiplication: seeded dihedral variants join the
-    # originals BEFORE featurization (contrastive-training widening;
-    # the reference trains on raw tiles only). union, not a flag on the
-    # featurizer: the variants are real rows with their own ids, so
-    # every downstream stage (cells, kNN, lineage) treats them uniformly.
-    if args.augment_copies > 0:
-        # a flipped/rotated tile keeps its source row's metadata (same
-        # location, same caption) — rejoin it via the base id
-        meta = images.drop("bytes", "w", "h") \
-            .withColumnRenamed("image_id", "base_id")
-        aug = (img_ops.augment_images(images, seed=args.seed,
-                                      copies=args.augment_copies)
-               .join(meta, "base_id").drop("base_id", "aug_op"))
-        images = images.unionByName(aug.select(*images.columns))
-
-    # E2: embedding export — id travels in the row (fixes the reference's
-    # positional id/embedding misalignment, loc2vec_run.py:33-48).
-    # Cache BEFORE PCA: pca_project runs a moments job plus the
-    # projection, and without the cache each would re-decode every PNG.
-    emb = img_ops.image_features(images).cache()
+    emb = tiles.select("image_id", "embedding")
     dim = 16
     if args.pca_k:
         feats = emb
@@ -110,12 +124,15 @@ def main(argv=None) -> None:
         cell_col="bucket", id_col="image_id")
 
     # F12: cells from metadata (one pass for both the kNN-blocking and
-    # output-partition resolutions); J5+W1: cell-blocked kNN in
-    # embedding space
-    cells_all = geo.with_cells(geo.with_latlon(images),
-                               resolutions=(args.res, 7)) \
-        .select("image_id", F.col(f"cell_r{args.res}").alias("cell"),
-                "cell_r7").cache()
+    # output-partition resolutions) — a variant keeps its source tile's
+    # location, so the kept tiles join on the base id; J5+W1:
+    # cell-blocked kNN in embedding space
+    cells = geo.with_cells(geo.with_latlon(images),
+                           resolutions=(args.res, 7)) \
+        .select(F.col("image_id").alias("base_id"),
+                F.col(f"cell_r{args.res}").alias("cell"), "cell_r7")
+    cells_all = tiles.select("image_id", "base_id").join(cells, "base_id") \
+        .drop("base_id").cache()
     pts = cells_all.select("image_id", "cell") \
                    .filter(F.col("cell").isNotNull()) \
                    .join(emb, "image_id")

@@ -4,8 +4,10 @@ The reference decodes one PNG per row with torchvision
 (``/root/reference/src/loc2vec/data_loading.py:124,129``) and exports
 embeddings by running the net over batches
 (``loc2vec_run.py:34-47``). The engine treats images as opaque binary
-columns with typed metadata (BASELINE.json input_hint) and crosses into
-Python exactly once per stage via Arrow-batched ``mapInPandas``:
+columns with typed metadata (BASELINE.json input_hint). Every operator
+here is a pure per-row function handed to the one decode-and-quarantine
+kernel, :func:`.media.map_media` — one Arrow crossing and one decode
+per row:
 
 - :func:`decode_stats` — decode + per-image pixel statistics (the PSNR /
   caption invariants are checked here in tests),
@@ -21,19 +23,19 @@ Python exactly once per stage via Arrow-batched ``mapInPandas``:
   remaining compressed a/v codecs (mp3/aac/h264) stay stubbed — the
   sandbox has none.
 
-Corrupt rows never abort the job: failed decodes emit NULL stats and are
-quarantined by filter (dead-letter semantics, SURVEY.md §2.8).
+Corrupt rows never abort the job: a decode that raises the codec
+contract's ``ValueError`` becomes an ok=false row with NULL stats,
+quarantined by filter (dead-letter semantics, SURVEY.md §2.8); any other
+exception is a bug and fails the job.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
 from ..png_codec import decode_png, encode_png
+from .media import map_media, with_ok
 
 
 def decode_image(data: bytes) -> np.ndarray:
@@ -81,24 +83,15 @@ DECODE_SCHEMA = T.StructType([
 def decode_stats(images: DataFrame) -> DataFrame:
     """Decode the binary column batch-at-a-time; emit per-image stats.
 
-    Rows with NULL/undecodable bytes get ok=false (quarantine, not
-    failure — one corrupt image of 10^12 must not kill the job)."""
+    Undecodable rows get ok=false (quarantine, not failure — one
+    corrupt image of 10^12 must not kill the job); NULL-bytes rows are
+    dropped."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for iid, data in zip(pdf["image_id"], pdf["bytes"]):
-                try:
-                    arr = decode_image(bytes(data))
-                    out.append((iid, True, arr.shape[0], arr.shape[1],
-                                round(float(arr.mean()), 6),
-                                round(float(arr.std()), 6)))
-                except Exception:
-                    out.append((iid, False, None, None, None, None))
-            yield pd.DataFrame(out, columns=[f.name for f in DECODE_SCHEMA])
+    def stats(iid, arr):
+        return [(iid, True, arr.shape[0], arr.shape[1],
+                 round(float(arr.mean()), 6), round(float(arr.std()), 6))]
 
-    return images.select("image_id", "bytes").filter(
-        "bytes IS NOT NULL").mapInPandas(gen, DECODE_SCHEMA)
+    return map_media(images, "image_id", decode_image, stats, DECODE_SCHEMA)
 
 
 FEATURE_DIM = 16  # matches the reference's embedding head (loc2vec_nn.py:32)
@@ -107,6 +100,21 @@ FEATURES_SCHEMA = T.StructType([
     T.StructField("image_id", T.StringType()),
     T.StructField("embedding", T.ArrayType(T.FloatType())),
 ])
+
+
+def embed(arr: np.ndarray) -> np.ndarray:
+    """The 16-dim feature vector of one decoded image: 3 channels x
+    4-bin histogram + 4 moments."""
+    arr = arr.astype(np.float32)
+    if arr.ndim == 2:
+        arr = arr[:, :, None].repeat(3, axis=2)
+    feats = []
+    for c in range(3):
+        h, _ = np.histogram(arr[:, :, c], bins=4, range=(0, 256))
+        feats.extend(h / arr[:, :, c].size)
+    feats.extend([arr.mean() / 255.0, arr.std() / 255.0,
+                  arr.min() / 255.0, arr.max() / 255.0])
+    return np.asarray(feats, dtype=np.float32)
 
 
 def image_features(images: DataFrame) -> DataFrame:
@@ -119,31 +127,9 @@ def image_features(images: DataFrame) -> DataFrame:
     id/embedding misalignment bug by construction
     (``loc2vec_run.py:33-48``, SURVEY.md §3 E2).
     """
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, vecs = [], []
-            for iid, data in zip(pdf["image_id"], pdf["bytes"]):
-                try:
-                    arr = decode_image(bytes(data)).astype(np.float32)
-                except Exception:
-                    continue  # quarantined
-                if arr.ndim == 2:
-                    arr = arr[:, :, None].repeat(3, axis=2)
-                # 3 channels x 4-bin histogram + 4 moments = 16 dims
-                feats = []
-                for c in range(3):
-                    h, _ = np.histogram(arr[:, :, c], bins=4,
-                                        range=(0, 256))
-                    feats.extend(h / arr[:, :, c].size)
-                feats.extend([arr.mean() / 255.0, arr.std() / 255.0,
-                              arr.min() / 255.0, arr.max() / 255.0])
-                ids.append(iid)
-                vecs.append(np.asarray(feats, dtype=np.float32))
-            yield pd.DataFrame({"image_id": ids, "embedding": vecs})
-
-    return images.select("image_id", "bytes").filter(
-        "bytes IS NOT NULL").mapInPandas(gen, FEATURES_SCHEMA)
+    return map_media(images, "image_id", decode_image,
+                     lambda iid, arr: [(iid, True, embed(arr))],
+                     with_ok(FEATURES_SCHEMA)).filter("ok").drop("ok")
 
 
 RESIZE_SCHEMA = T.StructType([
@@ -157,23 +143,14 @@ RESIZE_SCHEMA = T.StructType([
 def resize_images(images: DataFrame, *, out_px: int = 32) -> DataFrame:
     """Nearest-neighbor resize, PNG re-encode (pure numpy indexing)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for iid, data in zip(pdf["image_id"], pdf["bytes"]):
-                try:
-                    arr = decode_image(bytes(data))
-                except Exception:
-                    continue
-                hh, ww = arr.shape[0], arr.shape[1]
-                ri = (np.arange(out_px) * hh // out_px)
-                ci = (np.arange(out_px) * ww // out_px)
-                small = arr[np.ix_(ri, ci)]
-                out.append((iid, encode_png(small), out_px, out_px))
-            yield pd.DataFrame(out, columns=["image_id", "bytes", "w", "h"])
+    def resize(iid, arr):
+        ri = np.arange(out_px) * arr.shape[0] // out_px
+        ci = np.arange(out_px) * arr.shape[1] // out_px
+        return [(iid, True, encode_png(arr[np.ix_(ri, ci)]), out_px,
+                 out_px)]
 
-    return images.select("image_id", "bytes").filter(
-        "bytes IS NOT NULL").mapInPandas(gen, RESIZE_SCHEMA)
+    return map_media(images, "image_id", decode_image, resize,
+                     with_ok(RESIZE_SCHEMA)).filter("ok").drop("ok")
 
 
 PHASH_SCHEMA = T.StructType([
@@ -224,22 +201,14 @@ def phash_images(images: DataFrame) -> DataFrame:
     numpy — the band/bit plumbing downstream is hash-agnostic.
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for iid, data in zip(pdf["image_id"], pdf["bytes"]):
-                try:
-                    h = _ahash64(decode_image(bytes(data)))
-                except Exception:
-                    continue  # quarantined
-                signed = h - (1 << 64) if h >= (1 << 63) else h
-                bands = [(h >> s) & 0xFFFF for s in (48, 32, 16, 0)]
-                out.append((iid, signed, *bands))
-            yield pd.DataFrame(
-                out, columns=[f.name for f in PHASH_SCHEMA])
+    def phash(iid, arr):
+        h = _ahash64(arr)
+        signed = h - (1 << 64) if h >= (1 << 63) else h
+        return [(iid, True, signed,
+                 *((h >> s) & 0xFFFF for s in (48, 32, 16, 0)))]
 
-    return images.select("image_id", "bytes").filter(
-        "bytes IS NOT NULL").mapInPandas(gen, PHASH_SCHEMA)
+    return map_media(images, "image_id", decode_image, phash,
+                     with_ok(PHASH_SCHEMA)).filter("ok").drop("ok")
 
 
 QUALITY_SCHEMA = T.StructType([
@@ -288,6 +257,13 @@ def quality_signals(arr: np.ndarray) -> tuple[float, float, float, float,
             float(-(p * np.log2(p)).sum()))
 
 
+def degenerate(arr: np.ndarray) -> bool:
+    """Tiles under 3x3 have empty Laplacian/Sobel slices, so their
+    sharpness is NaN: it would pass the ok gate yet fail every threshold
+    filter. Such tiles are quarantined like corrupt ones."""
+    return arr.shape[0] < 3 or arr.shape[1] < 3
+
+
 def image_quality(images: DataFrame) -> DataFrame:
     """Per-image quality scoring for training-data filtering — the image
     face of the text_quality operator (blur, texture, exposure,
@@ -297,30 +273,13 @@ def image_quality(images: DataFrame) -> DataFrame:
     entropy > 1``): the signals are raw and deterministic, thresholds
     stay with the caller/job (run_mining --min-sharpness)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for iid, data in zip(pdf["image_id"], pdf["bytes"]):
-                try:
-                    arr = decode_image(bytes(data))
-                    # degenerate tiles (< 3x3) have empty Laplacian/
-                    # Sobel slices -> NaN sharpness that would pass the
-                    # ok gate yet fail every threshold filter; such
-                    # tiles are quarantined like corrupt ones (r2
-                    # advice)
-                    if arr.shape[0] < 3 or arr.shape[1] < 3:
-                        out.append((iid, False) + (None,) * 5)
-                        continue
-                    vals = quality_signals(arr)
-                    out.append((iid, True,
-                                *(round(v, 6) for v in vals)))
-                except Exception:
-                    out.append((iid, False) + (None,) * 5)
-            yield pd.DataFrame(
-                out, columns=[f.name for f in QUALITY_SCHEMA])
+    def quality(iid, arr):
+        if degenerate(arr):
+            raise ValueError("tile smaller than 3x3")
+        return [(iid, True, *(round(v, 6) for v in quality_signals(arr)))]
 
-    return images.select("image_id", "bytes").filter(
-        "bytes IS NOT NULL").mapInPandas(gen, QUALITY_SCHEMA)
+    return map_media(images, "image_id", decode_image, quality,
+                     QUALITY_SCHEMA)
 
 
 BORDER_SCHEMA = T.StructType([
@@ -371,25 +330,13 @@ def detect_borders(images: DataFrame, *, tol: int = 8) -> DataFrame:
     batches end-to-end; the decode rides the same magic sniff as
     every other image operator."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for iid, data in zip(pdf["image_id"], pdf["bytes"]):
-                try:
-                    arr = decode_image(bytes(data))
-                    t, b, le, r = border_box(arr, tol=tol)
-                    hw = arr.shape[0] * arr.shape[1]
-                    frac = 1.0 - ((b - t) * (r - le)) / hw
-                    out.append((iid, True, t, b, le, r,
-                                round(frac, 6)))
-                except Exception:
-                    out.append((iid, False, None, None, None, None,
-                                None))
-            yield pd.DataFrame(
-                out, columns=[f.name for f in BORDER_SCHEMA])
+    def borders(iid, arr):
+        t, b, le, r = border_box(arr, tol=tol)
+        frac = 1.0 - ((b - t) * (r - le)) / (arr.shape[0] * arr.shape[1])
+        return [(iid, True, t, b, le, r, round(frac, 6))]
 
-    return images.select("image_id", "bytes").filter(
-        "bytes IS NOT NULL").mapInPandas(gen, BORDER_SCHEMA)
+    return map_media(images, "image_id", decode_image, borders,
+                     BORDER_SCHEMA)
 
 
 AUGMENT_SCHEMA = T.StructType([
@@ -401,7 +348,15 @@ AUGMENT_SCHEMA = T.StructType([
     T.StructField("h", T.IntegerType()),
 ])
 
-_AUG_OPS = ("identity", "fliplr", "flipud", "rot90", "rot180", "rot270")
+_AUG_FNS = {
+    "identity": lambda a: a,
+    "fliplr": lambda a: a[:, ::-1],
+    "flipud": lambda a: a[::-1, :],
+    "rot90": lambda a: np.rot90(a, 1),
+    "rot180": lambda a: np.rot90(a, 2),
+    "rot270": lambda a: np.rot90(a, 3),
+}
+_AUG_OPS = tuple(_AUG_FNS)
 _AUG_KNUTH = 2654435761
 
 
@@ -413,6 +368,22 @@ def _aug_pick(image_id: str, seed: int, n_ops: int) -> int:
     for ch in str(image_id):
         h = (h * 131 + ord(ch)) & 0x7FFFFFFFFFFFFFFF
     return ((h * _AUG_KNUTH + seed) >> 16) % n_ops
+
+
+def variants(iid: str, arr: np.ndarray, seed: int, copies: int):
+    """The ``copies`` seeded dihedral variants of one decoded image, as
+    (variant id, op, pixels) triples.
+
+    Ids are always suffixed: variants are NEW rows that must never
+    collide with their source id. The source id travels as its own
+    column downstream — string-splitting the suffixed id back apart
+    would mis-join any source id that itself contains '#'."""
+    out = []
+    for c in range(copies):
+        op = _AUG_OPS[_aug_pick(f"{iid}#{c}", seed, len(_AUG_OPS))]
+        out.append((f"{iid}#aug{c}", op,
+                    np.ascontiguousarray(_AUG_FNS[op](arr))))
+    return out
 
 
 def augment_images(images: DataFrame, *, seed: int = 42,
@@ -430,44 +401,13 @@ def augment_images(images: DataFrame, *, seed: int = 42,
     partitioning (test_images).
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for iid, data in zip(pdf["image_id"], pdf["bytes"]):
-                try:
-                    arr = decode_image(bytes(data))
-                except Exception:
-                    continue
-                for c in range(copies):
-                    op = _AUG_OPS[_aug_pick(f"{iid}#{c}", seed,
-                                            len(_AUG_OPS))]
-                    if op == "identity":
-                        aug = arr
-                    elif op == "fliplr":
-                        aug = arr[:, ::-1]
-                    elif op == "flipud":
-                        aug = arr[::-1, :]
-                    elif op == "rot90":
-                        aug = np.rot90(arr, 1)
-                    elif op == "rot180":
-                        aug = np.rot90(arr, 2)
-                    else:
-                        aug = np.rot90(arr, 3)
-                    aug = np.ascontiguousarray(aug)
-                    # ids always suffixed: variants are NEW rows that
-                    # must never collide with their source id; base_id
-                    # travels as its OWN column — string-splitting the
-                    # suffixed id back apart would mis-join any source
-                    # id that itself contains '#' (review r2 batch 4)
-                    out.append((f"{iid}#aug{c}", iid, op,
-                                encode_png(aug),
-                                aug.shape[1], aug.shape[0]))
-            yield pd.DataFrame(
-                out, columns=["image_id", "base_id", "aug_op", "bytes",
-                              "w", "h"])
+    def augment(iid, arr):
+        return [(vid, True, iid, op, encode_png(aug), aug.shape[1],
+                 aug.shape[0])
+                for vid, op, aug in variants(iid, arr, seed, copies)]
 
-    return images.select("image_id", "bytes").filter(
-        "bytes IS NOT NULL").mapInPandas(gen, AUGMENT_SCHEMA)
+    return map_media(images, "image_id", decode_image, augment,
+                     with_ok(AUGMENT_SCHEMA)).filter("ok").drop("ok")
 
 
 def decode_av(images: DataFrame, *, kind: str) -> DataFrame:
@@ -478,7 +418,8 @@ def decode_av(images: DataFrame, *, kind: str) -> DataFrame:
     YUV4MPEG2 parses with pure numpy
     (:mod:`loc2vec_spark.operators.video`): decode, stats, features,
     frame sampling, quarantine-on-error, all through the same
-    one-Arrow-crossing template as :func:`decode_stats`. Baseline and
+    decode-and-quarantine kernel (:func:`.media.map_media`) as
+    :func:`decode_stats`. Baseline and
     progressive JPEG images decode for real as well (:mod:`.jpeg`, via
     :func:`decode_image` — kind="image" is NOT stubbed; it is the
     default image path), and MP4 containers demux for real with full
@@ -498,6 +439,6 @@ def decode_av(images: DataFrame, *, kind: str) -> DataFrame:
         return video_stats(images)
     raise NotImplementedError(
         f"{kind} decoding requires external codec libraries not present "
-        "in this environment; plug a decoder into the decode_stats "
-        "mapInPandas template (see operators/audio.py and video.py for "
-        "the wav/y4m instances of exactly that swap)")
+        "in this environment; plug a decoder into the media.map_media "
+        "kernel (see operators/audio.py and video.py for the wav/y4m "
+        "instances of exactly that swap)")

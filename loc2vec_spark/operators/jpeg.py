@@ -35,10 +35,10 @@ Performance shape: marker parsing and Huffman bit-reading are
 per-symbol Python (inherent to the format's serial entropy stream);
 everything block-math — dequantize, IDCT, level shift, chroma
 upsample, color transform — is one vectorized numpy pass over ALL
-blocks per component. Inside Spark this sits behind the standard
-one-Arrow-crossing mapInPandas template, one image per row, rows
-independent — throughput scales with partitions like every other
-decode operator.
+blocks per component. Inside Spark this sits behind the shared
+decode-and-quarantine kernel (``media.map_media``: one Arrow crossing,
+one image per row, rows independent) — throughput scales with
+partitions like every other decode operator.
 """
 
 from __future__ import annotations

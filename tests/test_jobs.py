@@ -14,6 +14,39 @@ def images_dir(tmp_path_factory):
     return os.path.join(str(d), "images.parquet")
 
 
+TINY, CORRUPT = "img_tiny_90000000", "img_corrupt_90000001"
+
+
+@pytest.fixture(scope="module")
+def mining_images_dir(images_dir, tmp_path_factory):
+    """The job fixture plus two edge rows for the mining job, both
+    located on the first fixture tile: a 2x2 tile (decodes and embeds,
+    but is too small for the quality signals) and a corrupt PNG."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from loc2vec_spark.png_codec import encode_png
+    table = pq.read_table(images_dir)
+    base = table.slice(0, 1).to_pandas()
+    extra = pd.concat([base, base], ignore_index=True)
+    extra["image_id"] = [TINY, CORRUPT]
+    extra["bytes"] = [
+        encode_png(np.array([[10, 200], [90, 30]], dtype=np.uint8)),
+        encode_png(np.zeros((8, 8), dtype=np.uint8))[:40] + b"garbage"]
+    d = tmp_path_factory.mktemp("job_imgs_edge")
+    pq.write_table(table, str(d / "part-0.parquet"))
+    pq.write_table(pa.Table.from_pandas(extra, schema=table.schema,
+                                        preserve_index=False),
+                   str(d / "part-1.parquet"))
+    return str(d)
+
+
+def _embedded_ids(spark, out):
+    return {r.image_id for r in spark.read.parquet(
+        os.path.join(out, "embeddings")).select("image_id").collect()}
+
+
 def _run_job(module_path, argv, spark):
     """Execute a jobs/ script's main() in-process against the session."""
     import importlib.util
@@ -23,16 +56,20 @@ def _run_job(module_path, argv, spark):
     mod.main(argv)
 
 
-def test_run_mining_end_to_end(spark, images_dir, tmp_path):
+def test_run_mining_end_to_end(spark, mining_images_dir, tmp_path):
     out = str(tmp_path / "mined_out")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     _run_job(os.path.join(repo, "jobs", "run_mining.py"),
-             ["--images", images_dir, "--out", out, "--res", "9",
+             ["--images", mining_images_dir, "--out", out, "--res", "9",
               "--k", "3", "--keep-session"], spark)
 
     emb = spark.read.parquet(os.path.join(out, "embeddings"))
     assert emb.count() > 100  # corrupt rows quarantined, rest embedded
     assert "embedding" in emb.columns
+    # gate off: the 2x2 tile embeds (only the quality signals refuse
+    # it); the corrupt PNG never does
+    ids = _embedded_ids(spark, out)
+    assert TINY in ids and CORRUPT not in ids
 
     mined = spark.read.parquet(os.path.join(out, "mined"))
     assert {"anchor_id", "rank", "neighbor_id", "hard_id"} <= \
@@ -47,40 +84,46 @@ def test_run_mining_end_to_end(spark, images_dir, tmp_path):
 
     # resume: second run commits nothing new
     _run_job(os.path.join(repo, "jobs", "run_mining.py"),
-             ["--images", images_dir, "--out", out, "--res", "9",
+             ["--images", mining_images_dir, "--out", out, "--res", "9",
               "--k", "3", "--keep-session"], spark)
     assert spark.read.parquet(os.path.join(out, "mined")).count() == n
 
 
-def test_run_mining_with_pca(spark, images_dir, tmp_path):
+def test_run_mining_with_pca(spark, mining_images_dir, tmp_path):
     out = str(tmp_path / "mined_pca")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     _run_job(os.path.join(repo, "jobs", "run_mining.py"),
-             ["--images", images_dir, "--out", out, "--res", "9",
+             ["--images", mining_images_dir, "--out", out, "--res", "9",
               "--k", "2", "--pca-k", "4", "--keep-session"], spark)
     emb = spark.read.parquet(os.path.join(out, "embeddings"))
     row = emb.select("embedding").first()
     assert len(row["embedding"]) == 4
 
 
-def test_run_mining_quality_gate(spark, images_dir, tmp_path):
-    """--min-sharpness drops low-texture tiles before featurization:
-    an absurd threshold keeps nothing; a zero threshold keeps all —
-    and the gated embedding set is a subset of the ungated one."""
+def test_run_mining_quality_gate(spark, mining_images_dir, tmp_path):
+    """--min-sharpness drops low-texture tiles before the kNN: exactly
+    the tiles image_quality passes at the threshold embed. The 2x2
+    tile is the edge: image_features accepts it, image_quality marks
+    it ok=false, so the gate drops it."""
     out = str(tmp_path / "mined_gated")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     from loc2vec_spark.operators import images as img_ops
-    imgs = spark.read.parquet(images_dir)
-    qual = img_ops.image_quality(imgs).filter("ok").toPandas()
+    imgs = spark.read.parquet(mining_images_dir)
+    quality = img_ops.image_quality(imgs).toPandas().set_index("image_id")
+    assert not quality.ok[TINY] and not quality.ok[CORRUPT]
+    featured = {r.image_id for r in
+                img_ops.image_features(imgs).select("image_id").collect()}
+    assert TINY in featured and CORRUPT not in featured
+    qual = quality[quality.ok]
     thr = float(qual.sharpness.quantile(0.5))  # median gate: ~half pass
     _run_job(os.path.join(repo, "jobs", "run_mining.py"),
-             ["--images", images_dir, "--out", out, "--res", "9",
+             ["--images", mining_images_dir, "--out", out, "--res", "9",
               "--k", "2", "--min-sharpness", str(thr), "--keep-session"],
              spark)
-    emb = spark.read.parquet(os.path.join(out, "embeddings"))
-    n_pass = int((qual.sharpness >= thr).sum())
-    assert emb.count() == n_pass
-    assert 0 < n_pass < len(qual)
+    ids = _embedded_ids(spark, out)
+    assert ids == set(qual.index[qual.sharpness >= thr])
+    assert 0 < len(ids) < len(qual)
+    assert TINY not in ids and CORRUPT not in ids
 
 
 def test_run_tiling_end_to_end(spark, images_dir, tmp_path):
@@ -247,14 +290,14 @@ def test_run_corpus_weighted_mixing(spark, tmp_path):
         assert per["src0"] > per["src1"]
 
 
-def test_run_mining_with_augmentation(spark, images_dir, tmp_path):
+def test_run_mining_with_augmentation(spark, mining_images_dir, tmp_path):
     """--augment-copies multiplies the embedding pool: each source tile
     contributes itself plus N seeded flip/rotate variants that inherit
     its metadata (same cell), all flowing through featurize/kNN/write."""
     out = str(tmp_path / "mined_aug")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     _run_job(os.path.join(repo, "jobs", "run_mining.py"),
-             ["--images", images_dir, "--out", out, "--res", "9",
+             ["--images", mining_images_dir, "--out", out, "--res", "9",
               "--k", "2", "--augment-copies", "1", "--keep-session"],
              spark)
     emb = spark.read.parquet(os.path.join(out, "embeddings"))
@@ -264,6 +307,7 @@ def test_run_mining_with_augmentation(spark, images_dir, tmp_path):
     # every decodable source tile embeds once raw + once augmented
     assert len(aug_ids) == len(base_ids)
     assert {i.split("#")[0] for i in aug_ids} == set(base_ids)
+    assert TINY in base_ids and not any(CORRUPT in i for i in ids)
 
 
 def test_run_crawl_end_to_end(spark, tmp_path):

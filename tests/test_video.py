@@ -114,3 +114,11 @@ def test_zero_fps_header_rejected_at_decode():
     bad = good.replace(b"F10:1", b"F0:1", 1)
     with pytest.raises(ValueError):
         V.decode_y4m(bad)
+
+
+def test_zero_fps_denominator_rejected_at_decode():
+    """F10:0 divided by zero inside the header parse; the media kernel
+    quarantines only ValueError, so it must raise that instead."""
+    good = V.encode_y4m(np.zeros((2, 8, 8), dtype=np.uint8), fps=10)
+    with pytest.raises(ValueError, match="zero denominator"):
+        V.decode_y4m(good.replace(b"F10:1", b"F10:0", 1))

@@ -88,7 +88,8 @@ def test_webp_probe_operator(spark):
 
 def test_webp_quarantines_from_decode_stats(spark):
     """Through decode_image's sniff a WebP row lands ok=false (the
-    named stub is an Exception like any undecodable), never a crash."""
+    named stub raises NotImplementedError, which the media kernel
+    quarantines like the codec ValueError), never a crash."""
     from loc2vec_spark.operators.images import decode_stats
     rows = [("w0", bytearray(synth_webp_bytes()))]
     df = spark.createDataFrame(rows, "image_id STRING, bytes BINARY")
