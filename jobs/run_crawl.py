@@ -14,7 +14,10 @@ WARC archives (binaryFile glob, file-parallel)
      (corrupt archives salvage their clean prefix and land one row in
      out/quarantine_archives — a bad shard of 10^5-10^6 archives must
      neither kill the job nor vanish silently)
-  -> keep HTTP 200 text/html responses (skipped statuses/types counted)
+  -> keep HTTP 200 text/html responses with a Target-URI (the funnel
+     — records walked, skipped statuses/types, missing uris — is one
+     DataFrame.observe on this walk)
+  -> URL dedup: the earliest fetch per canonical URL (one window)
   -> operators.html.html_extract  boilerplate strip (Arrow-batched
      pandas UDF: script/style/nav/chrome subtrees dropped, first
      non-empty document title captured, entities decoded, whitespace
@@ -25,11 +28,17 @@ WARC archives (binaryFile glob, file-parallel)
   -> lineage-manifested resumable write (out/documents), bucketed by
      doc_id hash exactly like run_corpus's output
 
+The archives are walked twice: once for the quarantine write, once
+for extraction. The quarantine keeps its own walk so the dead-letter
+write survives an extraction failure; nothing raw is cached.
+
 Reference anchor: the S1 directory-as-table scan
 (``/root/reference/src/data_loading.py:142-149``) generalized to the
 crawl-archive container per SURVEY.md §2.10. Every stage is an
 oracle-checked operator face (warc_records, html_text_extract);
-this job is their composition. Prints one JSON stats line.
+this job is their composition. Prints one JSON stats line, in which
+records_walked = documents + skipped_non_html + missing_uri
++ url_duplicates + dropped_short.
 """
 
 from __future__ import annotations
@@ -41,7 +50,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql import Observation, Window, functions as F  # noqa: E402
 
 from loc2vec_spark import lineage  # noqa: E402
 from loc2vec_spark.session import get_spark  # noqa: E402
@@ -63,89 +72,55 @@ def main(argv=None) -> None:
     ensure_workers_can_import(spark)
 
     from loc2vec_spark.operators.html import html_extract_udf
+    from loc2vec_spark.operators.url import canonicalize_urls
     from loc2vec_spark.operators.warc import read_warc
 
     stats = {}
     good, quarantine = read_warc(spark, args.warc)
 
-    # dead-letter sink first (S7-style): the archive-level quarantine
-    # is tiny (one row per corrupt archive) and must survive even if
-    # the extraction stage below fails
+    # walk 1 of 2, the dead-letter sink (S7-style): the archive-level
+    # quarantine is tiny (one row per corrupt archive) and is written
+    # by its own walk so it survives even if the extraction below fails
     qpath = os.path.join(args.out, "quarantine_archives")
     quarantine.write.mode("overwrite").parquet(qpath)
     stats["quarantined_archives"] = spark.read.parquet(qpath).count()
 
-    # funnel counts in ONE aggregation over an uncached walk — caching
-    # the records frame would pin every decompressed body for the
-    # count phase (read_warc's docstring: recompute beats pinning at
-    # the 10^5-10^6-archive operating point), so the job pays THREE
-    # walks total (the quarantine split above, this count, and the
-    # extraction below) and pins nothing raw; folding the funnel into
-    # the quarantine pass would save one walk at the cost of a cached
-    # full-body frame, the wrong trade at the operating point.
-    # The funnel is the job's operational contract: every dropped row
-    # is counted under a reason, nothing vanishes silently — so the
-    # group key is NULL-coalesced: is_html is NULL (not False) for a
-    # non-response record (status NULL) with an html content type, and
-    # a raw bool(r[...]) key would collapse the NULL and False groups,
-    # silently dropping whichever count iterated first.
+    # walk 2 of 2, extraction. The funnel is the job's operational
+    # contract — every dropped row is counted under a named reason —
+    # and is observed as a side effect of this walk, so counting costs
+    # no walk of its own and pins no raw body. is_html is NULL-coalesced:
+    # a non-response record (status NULL) with an html content type
+    # must count as non-HTML, not vanish from both counts.
     is_html = F.coalesce(
         (F.col("status") == 200) & F.coalesce(
             F.lower(F.col("content_type")).startswith("text/html"),
             F.lit(False)),
         F.lit(False))
-    funnel = {bool(r["is_html"]): r["n"] for r in
-              good.groupBy(is_html.alias("is_html"))
-                  .agg(F.count("*").alias("n")).collect()}
-    stats["records_walked"] = sum(funnel.values())
-    stats["skipped_non_html"] = funnel.get(False, 0)
+    no_uri = F.col("uri").isNull()
+    funnel = Observation()
+    good = good.observe(
+        funnel, F.count(F.lit(1)).alias("records_walked"),
+        F.count_if(~is_html).alias("skipped_non_html"),
+        F.count_if(is_html & no_uri).alias("missing_uri"))
 
     # URL-level dedup BEFORE paying to parse: re-crawls and tracked
     # variants of the same page (scheme case, utm_* params, fragments,
-    # trailing slashes) collapse on the canonical URL — the earliest
-    # (warc_date, uri) fetch wins deterministically. Malformed URLs
-    # canonicalize to NULL and each stays its own row (a parse failure
-    # must not glue unrelated pages together). Plan shape (review r5:
-    # bodies never cross Arrow for a uri-only computation): canonical
-    # keys compute on the DISTINCT (uri, warc_date) projection, the
-    # winner per key is a window top-1 over that small relation, and
-    # the bodies shuffle ONCE in the join back — the unavoidable cost
-    # of picking one body per page. Exact twin records (same uri AND
-    # date) both pass the join; their doc_ids collide and the
-    # post-extraction doc_id dedup below collapses them on the small
-    # extracted frame, not the raw bodies.
-    from pyspark.sql import Window
-
-    from loc2vec_spark.operators.url import canonicalize_urls
-
-    html = good.filter(is_html)
-    proj = canonicalize_urls(
-        html.select("uri", "warc_date").distinct(), "uri")
-    ukey = F.coalesce("canon_url", "uri")
-    # NULLS LAST: "earliest fetch wins" must not let a record whose
-    # date is UNKNOWN beat a properly dated fetch of the same page
-    # (ascending default is nulls-first, and with the null-safe join
-    # below that winner would actually survive — review r5)
-    wnd = Window.partitionBy(ukey).orderBy(
-        F.col("warc_date").asc_nulls_last(),
-        F.col("uri").asc_nulls_last())
-    winners = (proj.withColumn("_rk", F.row_number().over(wnd))
-                   .filter("_rk = 1").drop("_rk")
-                   .withColumnRenamed("uri", "_wuri")
-                   .withColumnRenamed("warc_date", "_wdate"))
-    # NULL-SAFE equi-join (review r5): a response record may lack its
-    # WARC-Date (or even Target-URI) header, and a winner carrying a
-    # NULL key would match NOTHING under plain equality — its whole
-    # canonical group would vanish from the corpus while the funnel
-    # miscounted it as a duplicate. <=> joins are still hash
-    # joinable, so the plan shape is unchanged.
-    pages = (html.join(
-        winners,
-        html["uri"].eqNullSafe(F.col("_wuri"))
-        & html["warc_date"].eqNullSafe(F.col("_wdate")))
-        .drop("_wuri", "_wdate"))
-    pages = pages.withColumn(
-        "ex", html_extract_udf()(F.col("body").cast("string")))
+    # trailing slashes) collapse on the canonical URL. Malformed URLs
+    # canonicalize to NULL and key on their raw uri (a parse failure
+    # must not glue unrelated pages together); records without a uri
+    # have no key at all and are counted as missing_uri above. The
+    # earliest fetch wins: dated before undated (an UNKNOWN date must
+    # not beat a known one), then uri, then the body — so exact
+    # (uri, warc_date) twins resolve the same way in every run. The
+    # bodies shuffle once, the unavoidable cost of picking one per page.
+    html = canonicalize_urls(good.filter(is_html & ~no_uri), "uri")
+    wnd = Window.partitionBy(F.coalesce("canon_url", "uri")).orderBy(
+        F.col("warc_date").asc_nulls_last(), "uri", F.xxhash64("body"),
+        "body")
+    pages = (html.withColumn("_rk", F.row_number().over(wnd))
+                 .filter("_rk = 1")
+                 .withColumn("ex", html_extract_udf()(
+                     F.col("body").cast("string"))))
     docs = pages.select(
         # doc_id stays a pure function of the RAW uri (re-crawl
         # stable, resume-layout stable); canon_url rides along for
@@ -159,12 +134,12 @@ def main(argv=None) -> None:
          .alias("source"),
         F.length("ex.text").cast("bigint").alias("n_chars"),
         F.col("ex.title").alias("title"),
-        "uri", "canon_url", "warc_date") \
-        .dropDuplicates(["doc_id"]).cache()
+        "uri", "canon_url", "warc_date").cache()
     html_unique = docs.count()
+    stats.update(funnel.get)
     stats["url_duplicates"] = (stats["records_walked"]
                                - stats["skipped_non_html"]
-                               - html_unique)
+                               - stats["missing_uri"] - html_unique)
     kept = docs.filter(F.col("n_chars") >= args.min_chars)
     stats["documents"] = kept.count()
     stats["dropped_short"] = html_unique - stats["documents"]

@@ -146,9 +146,11 @@ def _id_hash_col(colname: str, seed: int, mod: int):
 
     Works for bigint ids directly; string ids go through a stable
     digit-extraction (ids in this engine embed their index: img_00000042).
+    An id without digits (or too many for a bigint) hashes as 0:
+    TRY_CAST, because a plain CAST of '' raises under ANSI mode.
     """
-    e = (f"CAST(REGEXP_REPLACE(CAST({colname} AS STRING), '[^0-9]', '') "
-         f"AS BIGINT)")
+    e = (f"TRY_CAST(REGEXP_REPLACE(CAST({colname} AS STRING), '[^0-9]', "
+         f"'') AS BIGINT)")
     return F.expr(_hash_sql(f"COALESCE({e}, 0)", seed, mod))
 
 

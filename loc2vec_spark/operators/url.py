@@ -10,7 +10,8 @@ pays to parse or shingle its body. This module provides:
   urllib.parse), one URL -> canonical form;
 - :func:`canonicalize_urls` — the Arrow-batched operator adding
   ``canon_url`` + ``host`` columns (malformed URLs canonicalize to
-  NULL — quarantine-by-null, filterable, never a thrown row);
+  NULL — quarantine-by-null, filterable, never a thrown row); only
+  the URL column crosses into Python;
 - :func:`dedup_urls` — keep-min-id verdicts per canonical URL, the
   same (key, keep, dup_of) verdict shape as the text dedup family,
   one hash-partitioned groupBy at any scale.
@@ -27,7 +28,6 @@ but keep their scheme; inputs without a parseable host -> NULL.
 """
 from __future__ import annotations
 
-from typing import Iterator
 from urllib.parse import parse_qsl, urlencode, urlsplit
 
 import pandas as pd
@@ -105,23 +105,18 @@ CANON_FIELDS = [T.StructField("canon_url", T.StringType()),
 def canonicalize_urls(df: DataFrame, url_col: str = "uri") -> DataFrame:
     """Add ``canon_url`` + ``host`` columns (NULL on malformed input —
     the quarantine-by-null convention; filter ``canon_url IS NULL``
-    for the dead-letter view). One Arrow crossing, no shuffle — a
-    pure per-row projection that scales embarrassingly."""
-    schema = T.StructType(
-        [f for f in df.schema.fields] + CANON_FIELDS)
+    for the dead-letter view). One struct pandas UDF over ``url_col``:
+    only the URL crosses Arrow, every other column (bodies included)
+    stays in the JVM. No shuffle — a pure per-row projection."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pairs = [_canonical_parts(u) if isinstance(u, str)
-                     else (None, None) for u in pdf[url_col]]
-            canon = [p[0] for p in pairs]
-            host = [p[1] for p in pairs]
-            out = pdf.copy()
-            out["canon_url"] = pd.Series(canon, dtype=object)
-            out["host"] = pd.Series(host, dtype=object)
-            yield out
+    @F.pandas_udf(T.StructType(CANON_FIELDS))
+    def _canon(urls: pd.Series) -> pd.DataFrame:
+        return pd.DataFrame(
+            [_canonical_parts(u) if isinstance(u, str) else (None, None)
+             for u in urls], columns=["canon_url", "host"])
 
-    return df.mapInPandas(gen, schema)
+    return (df.withColumn("_canon", _canon(F.col(url_col)))
+              .select("*", "_canon.*").drop("_canon"))
 
 
 def dedup_urls(df: DataFrame, id_col: str, url_col: str = "uri") -> DataFrame:

@@ -247,11 +247,11 @@ def read_warc(spark: SparkSession, path: str, *,
     conversion records land here too, with ``status`` NULL when the
     payload carries no HTTP status line — WET-style conversion records
     are the common case; filter on ``status IS NOT NULL`` or
-    content_type for response-only views, as jobs/run_crawl.py's
-    funnel does with a NULL-coalesced key). quarantine: (path, err) —
-    one row per
-    archive whose walk hit a corruption, after salvaging the records
-    that preceded it (parse_warc_safe). Same contract as
+    content_type for response-only views, as jobs/run_crawl.py does
+    with a NULL-coalesced key whose counts it observes during its
+    extraction walk). quarantine: (path, err) — one row per archive
+    whose walk hit a corruption, after salvaging the records that
+    preceded it (parse_warc_safe). Same contract as
     ``sources.read_documents``: a bad shard of 10^12 must neither kill
     the job nor vanish silently.
 

@@ -53,7 +53,15 @@ def _run_job(module_path, argv, spark):
     spec = importlib.util.spec_from_file_location("jobmod", module_path)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
-    mod.main(argv)
+    return mod.main(argv)
+
+
+def _assert_crawl_conserved(stats):
+    """Every walked WARC record is a document or a named drop."""
+    assert stats["records_walked"] == (
+        stats["documents"] + stats["skipped_non_html"]
+        + stats["url_duplicates"] + stats["dropped_short"]
+        + stats["missing_uri"]), stats
 
 
 def test_run_mining_end_to_end(spark, mining_images_dir, tmp_path):
@@ -358,6 +366,7 @@ def test_run_crawl_end_to_end(spark, tmp_path):
     assert stats["skipped_non_html"] == 2         # the 404 + the json
     assert stats["documents"] == stats["records_walked"] - 2
     assert stats["written_docs"] == stats["documents"]
+    _assert_crawl_conserved(stats)
 
     docs = spark.read.parquet(os.path.join(out, "documents"))
     assert docs.count() == stats["documents"]
@@ -383,6 +392,7 @@ def test_run_crawl_end_to_end(spark, tmp_path):
     stats2 = mod.main(["--warc", str(wdir / "*"), "--out", out,
                        "--keep-session"])
     assert stats2["written_docs"] == 0
+    _assert_crawl_conserved(stats2)
     assert spark.read.parquet(os.path.join(out, "documents")).count() \
         == stats["documents"]
 
@@ -428,6 +438,7 @@ def test_run_crawl_funnel_counts_non_response_records(spark, tmp_path):
     assert stats["skipped_non_html"] == 1        # the conversion record
     assert stats["documents"] == 3
     assert stats["dropped_short"] == 0
+    _assert_crawl_conserved(stats)
 
 
 def test_run_trajectory_end_to_end(spark, tmp_path):
@@ -516,6 +527,7 @@ def test_run_crawl_url_dedup(spark, tmp_path):
     assert stats["records_walked"] == 5
     assert stats["url_duplicates"] == 2
     assert stats["documents"] == 3
+    _assert_crawl_conserved(stats)
     docs = spark.read.parquet(_os.path.join(out, "documents"))
     uris = {r["uri"] for r in docs.collect()}
     # the earliest (warc_date, uri) fetch of the duplicated page won
@@ -591,6 +603,7 @@ def test_run_crawl_keeps_null_date_records(spark, tmp_path):
     assert stats["records_walked"] == 4
     assert stats["url_duplicates"] == 1           # the twin pair
     assert stats["documents"] == 3
+    _assert_crawl_conserved(stats)
     docs = spark.read.parquet(_os.path.join(out, "documents"))
     rows = {r["uri"]: r for r in docs.collect()}
     assert set(rows) == {"http://nodate.test/a", "http://dated.test/b",
@@ -600,3 +613,64 @@ def test_run_crawl_keeps_null_date_records(spark, tmp_path):
     # the dated twin won, not the undated one
     assert rows["http://twin.test/c"]["warc_date"] == \
         "2026-02-05T00:00:00Z"
+
+
+def _crawl(warc_glob, out, spark):
+    """jobs/run_crawl.py's main() in-process; returns its stats."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return _run_job(os.path.join(repo, "jobs", "run_crawl.py"),
+                    ["--warc", warc_glob, "--out", out, "--keep-session"],
+                    spark)
+
+
+def _html(text):
+    return f"<html><body><p>{text}</p></body></html>".encode()
+
+
+def test_run_crawl_counts_missing_uri(spark, tmp_path):
+    """HTML records without a WARC-Target-URI have no dedup key: they
+    are counted under missing_uri and never glued into one document."""
+    from loc2vec_spark.operators.warc import build_warc
+
+    recs = [{"uri": u, "date": "2026-02-01T00:00:00Z", "status": 200,
+             "content_type": "text/html", "body": _html(u)}
+            for u in ("NOURI", "NOURI", "http://kept.test/a")]
+    recs[1]["body"] = _html("another page")
+    archive = build_warc(recs).replace(b"WARC-Target-URI: NOURI\r\n", b"")
+    wdir = tmp_path / "warcs"
+    wdir.mkdir()
+    (wdir / "a.warc").write_bytes(archive)
+    out = str(tmp_path / "out")
+    stats = _crawl(str(wdir / "*"), out, spark)
+
+    assert stats["records_walked"] == 3
+    assert stats["missing_uri"] == 2
+    assert stats["url_duplicates"] == 0
+    assert stats["documents"] == 1
+    _assert_crawl_conserved(stats)
+    docs = spark.read.parquet(os.path.join(out, "documents")).collect()
+    assert [(r["uri"], r["text"]) for r in docs] == [
+        ("http://kept.test/a", "http://kept.test/a")]
+
+
+def test_run_crawl_twin_pick_is_deterministic(spark, tmp_path):
+    """Two fetches with the same uri AND date but different bodies:
+    the same one wins whichever order the archive holds them in."""
+    from loc2vec_spark.operators.warc import build_warc
+
+    twins = [{"uri": "http://twin.test/p", "date": "2026-02-01T00:00:00Z",
+              "status": 200, "content_type": "text/html",
+              "body": _html(f"version {v}")} for v in ("one", "two")]
+    texts = []
+    for order in (twins, twins[::-1]):
+        wdir = tmp_path / f"warcs{len(texts)}"
+        wdir.mkdir()
+        (wdir / "a.warc").write_bytes(build_warc(order))
+        out = str(tmp_path / f"out{len(texts)}")
+        stats = _crawl(str(wdir / "*"), out, spark)
+        assert stats["documents"] == 1 and stats["url_duplicates"] == 1
+        _assert_crawl_conserved(stats)
+        docs = spark.read.parquet(os.path.join(out, "documents")).collect()
+        texts += [r["text"] for r in docs]
+    assert len(texts) == 2 and texts[0] == texts[1]
+    assert texts[0] in ("version one", "version two")

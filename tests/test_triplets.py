@@ -140,3 +140,34 @@ def test_spatial_positive_identical_across_join_salt(pts):
     assert len(base) > 0
     assert rows(4) == base
     assert rows(8) == base
+
+
+def test_id_hash_digitless_ids(spark):
+    """An id without digits hashes as 0 instead of failing the job under
+    ANSI mode; ids with digits keep their hashes (values pinned from
+    the plain-CAST version)."""
+    ids = spark.createDataFrame(
+        [("img_00000042",), ("img_7",), ("tile_123_456",), ("99",),
+         ("img_tiny",)], "id string")
+    got = {r.id: (r.h, r.b) for r in ids.select(
+        "id", triplets._id_hash_col("id", 42, 1_000_000_007).alias("h"),
+        triplets._id_hash_col("id", 43, 64).alias("b")).collect()}
+    assert got == {"img_00000042": (486301227, 53), "img_7": (581050243, 2),
+                   "tile_123_456": (19016116, 43), "99": (789138547, 30),
+                   "img_tiny": (42, 43)}
+
+    # knn_topk over a mix of digit and digit-less ids: the capped
+    # candidate side ranks rows by this hash
+    cell = int(cells.latlon_to_cell(np.array([10.0]), np.array([10.0]),
+                                    RES)[0])
+    mixed = spark.createDataFrame(
+        [(i, [x, 0.0], cell) for i, x in (
+            ("img_00000001", 0.0), ("img_00000002", 1.0),
+            ("img_tiny", 3.0), ("img_huge", 7.0))],
+        "id string, emb array<double>, cell long")
+    got = triplets.knn_topk(mixed, id_col="id", emb_col="emb",
+                            cell_col="cell", res=RES, dim=2, k=1,
+                            cap=16, include_dist=False)
+    assert sorted((r.anchor_id, r.neighbor_id) for r in got.collect()) == [
+        ("img_00000001", "img_00000002"), ("img_00000002", "img_00000001"),
+        ("img_huge", "img_tiny"), ("img_tiny", "img_00000002")]

@@ -103,6 +103,26 @@ def test_canonicalize_urls_operator(spark):
     assert out[4]["canon_url"] is None
 
 
+def test_canonicalize_urls_crosses_one_column(spark):
+    """Only the URL crosses into Python: every other column (a binary
+    body included) comes back unchanged and in order, and the plan has
+    no whole-row MapInPandas."""
+    body = bytes(range(256)) * 4
+    rows = [(1, "http://www.a.io/x/", body, 2.5),
+            (2, None, None, None),
+            (3, "%%%", b"", -1.0)]
+    df = spark.createDataFrame(
+        rows, "doc_id long, uri string, body binary, score double")
+    out = canonicalize_urls(df)
+    assert out.columns == df.columns + ["canon_url", "host"]
+    got = sorted(out.collect())
+    assert [tuple(r)[:4] for r in got] == rows
+    assert [(r["canon_url"], r["host"]) for r in got] == [
+        ("http://a.io/x", "a.io"), (None, None), (None, None)]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan
+
+
 def test_dedup_urls_verdicts(spark):
     rows = [(10, "http://a.io/x"),
             (11, "http://www.a.io/x/"),
@@ -130,4 +150,4 @@ def test_dedup_urls_plan_shape(spark):
                                     .executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan      # no per-row Python
-    assert plan.count("MapInPandas") <= 2     # canon computed per side
+    assert plan.count("MapInPandas") == 0     # only the URL crosses
